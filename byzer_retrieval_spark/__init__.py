@@ -22,6 +22,12 @@ Arrow-batched pandas UDFs only for posting-block encode/decode and the
 WAND scorer, which Spark has no built-in operator for.
 """
 
+from byzer_retrieval_spark import _zipimport_guard
+
+# every engine UDF imports this package when it is unpickled on a worker,
+# so the guard also covers PySpark's per-task invalidate_caches() there
+_zipimport_guard.install()
+
 __version__ = "0.1.0"
 
 __all__ = ["RetrievalEngine", "SearchQuery", "__version__"]

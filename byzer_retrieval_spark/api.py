@@ -72,8 +72,12 @@ class RetrievalEngine:
         # shuffle partitions sized to the index, not the session default
         # (round 6): every query-path exchange keys on shard_id (scorer
         # cogroups, gate frames), whose cardinality IS num_shards —
-        # partitions beyond that are empty tasks that still pay Python
-        # worker round trips. Scale-adaptive by construction: a 100 TB
+        # partitions beyond that are empty JVM tasks. Spark skips the
+        # Python runner for an empty partition, so each costs only task
+        # scheduling (29 empty of 32 partitions added 25-50 ms to a
+        # 3-group applyInPandas on local[3]); the fixed cost of a
+        # non-empty Python task is the worker's per-task setup (see
+        # _zipimport_guard). Scale-adaptive by construction: a 100 TB
         # table has thousands of shards and gets thousands of partitions.
         self.query_spark.conf.set(
             "spark.sql.shuffle.partitions",
@@ -85,9 +89,15 @@ class RetrievalEngine:
         # ever SPLIT across scan tasks — a split would separate a doc's
         # postings from its gate evidence. One listing per snapshot
         # (cached with the context); the +1 MB headroom matches
-        # openCostInBytes so same-size sibling files don't pack two to
-        # a task (keeps scan parallelism at one-file-per-task, the
-        # shard-granular layout queries want at every scale).
+        # openCostInBytes so same-size sibling files over the 4 MB floor
+        # don't pack two to a task (one file per task, the
+        # shard-granular layout queries want at scale; smaller files
+        # pack up to the floor, which packing order makes harmless).
+        # Spark splits at min(maxPartitionBytes, max(openCostInBytes,
+        # totalBytes / minPartitionNum)), and minPartitionNum defaults to
+        # the task slots: with more slots than postings files that cap
+        # falls below the pin and splits files of several row groups.
+        # minPartitionNum=1 makes the pin the cap.
         try:
             jvm = self.query_spark._jvm
             jpath = jvm.org.apache.hadoop.fs.Path(store.postings_path)
@@ -102,6 +112,7 @@ class RetrievalEngine:
                 "spark.sql.files.maxPartitionBytes",
                 str(max(4 << 20, mx + (1 << 20) + 1)),
             )
+            self.query_spark.conf.set("spark.sql.files.minPartitionNum", "1")
             ctx.__dict__["_stream_safe"] = True
         except Exception:
             # listing failed → the no-file-split guarantee is NOT

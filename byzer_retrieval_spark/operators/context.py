@@ -13,6 +13,27 @@ from byzer_retrieval_spark.sources.storage import IndexStore
 _MISS = object()
 
 
+class TermDfs(dict):
+    """{(field, term): df} read from the stats table at ``stats_path``.
+
+    The scorers look df up for every (field, term) the postings scan
+    returns, inside executors. A missing entry means the postings hold a
+    term the stats table lacks (stats/postings drift), so say that,
+    naming the table, instead of a bare ``KeyError``."""
+
+    def __init__(self, entries, stats_path: str):
+        super().__init__(entries)
+        self.stats_path = stats_path
+
+    def __missing__(self, key):
+        field, term = key
+        raise LookupError(
+            f"no df for term {term!r} of field {field!r} in the stats table "
+            f"{self.stats_path}: the stats and postings tables have drifted "
+            "(the postings hold a term the stats lack)"
+        )
+
+
 @dataclass
 class IndexContext:
     spark: SparkSession
@@ -146,7 +167,7 @@ class IndexContext:
         stats join."""
         terms = list(dict.fromkeys(terms))
         if not terms:
-            return {}
+            return TermDfs((), self.store.stats_path)
         cache = self.__dict__.setdefault("_dfs_ds", {})
         d = cache.get("ds", _MISS)
         if d is _MISS:
@@ -177,11 +198,14 @@ class IndexContext:
             )
         except Exception:
             return None
-        return {
-            (f, t): float(v)
-            for f, t, v in zip(
-                tbl.column("field").to_pylist(),
-                tbl.column("term").to_pylist(),
-                tbl.column("df").to_pylist(),
-            )
-        }
+        return TermDfs(
+            (
+                ((f, t), float(v))
+                for f, t, v in zip(
+                    tbl.column("field").to_pylist(),
+                    tbl.column("term").to_pylist(),
+                    tbl.column("df").to_pylist(),
+                )
+            ),
+            self.store.stats_path,
+        )
