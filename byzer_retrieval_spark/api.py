@@ -61,65 +61,56 @@ class RetrievalEngine:
         context memoizes its table readers (file listing + footer
         schema ≈ 0.3-0.5 s of driver work per open), and every mutation
         commits a new snapshot id, which invalidates the cache entry —
-        so a reused context can never see a stale file set."""
+        so a reused context can never see a stale file set.
+
+        The query session's conf is shared by every table, so the
+        table's scan and shuffle settings are cached with its context
+        and set again on every call, cache hits included: after a query
+        on a table with smaller files, a cached table's split pin would
+        otherwise stay below its own largest postings file."""
         store = self.store(database, table)
         sid = store.current_snapshot_id()
         key = (database, table)
         hit = self._ctx_cache.get(key)
-        if hit is not None and hit[0] == sid:
-            return hit[1]
-        ctx = IndexContext.open(self.query_spark, store)
-        # shuffle partitions sized to the index, not the session default
-        # (round 6): every query-path exchange keys on shard_id (scorer
-        # cogroups, gate frames), whose cardinality IS num_shards —
-        # partitions beyond that are empty JVM tasks. Spark skips the
-        # Python runner for an empty partition, so each costs only task
-        # scheduling (29 empty of 32 partitions added 25-50 ms to a
-        # 3-group applyInPandas on local[3]); the fixed cost of a
-        # non-empty Python task is the worker's per-task setup (see
-        # _zipimport_guard). Scale-adaptive by construction: a 100 TB
-        # table has thousands of shards and gets thousands of partitions.
-        self.query_spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(max(8, int(ctx.meta.get("num_shards", 8)))),
-        )
-        # pin the split size just above the largest postings file
-        # (round 6): the zero-exchange WAND stream path
-        # (wand._shard_stream_runner) requires that no parquet file is
-        # ever SPLIT across scan tasks — a split would separate a doc's
-        # postings from its gate evidence. One listing per snapshot
-        # (cached with the context); the +1 MB headroom matches
-        # openCostInBytes so same-size sibling files over the 4 MB floor
-        # don't pack two to a task (one file per task, the
-        # shard-granular layout queries want at scale; smaller files
-        # pack up to the floor, which packing order makes harmless).
-        # Spark splits at min(maxPartitionBytes, max(openCostInBytes,
-        # totalBytes / minPartitionNum)), and minPartitionNum defaults to
-        # the task slots: with more slots than postings files that cap
-        # falls below the pin and splits files of several row groups.
-        # minPartitionNum=1 makes the pin the cap.
-        try:
-            jvm = self.query_spark._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(store.postings_path)
-            fs = jpath.getFileSystem(
-                self.query_spark._jsc.hadoopConfiguration()
-            )
-            it = fs.listFiles(jpath, True)
-            mx = 0
-            while it.hasNext():
-                mx = max(mx, int(it.next().getLen()))
-            self.query_spark.conf.set(
-                "spark.sql.files.maxPartitionBytes",
-                str(max(4 << 20, mx + (1 << 20) + 1)),
-            )
-            self.query_spark.conf.set("spark.sql.files.minPartitionNum", "1")
-            ctx.__dict__["_stream_safe"] = True
-        except Exception:
-            # listing failed → the no-file-split guarantee is NOT
-            # established; the flag stays unset and wand falls back to
-            # the exchange-based scorer (correct at any split size)
-            ctx.__dict__["_stream_safe"] = False
-        self._ctx_cache[key] = (sid, ctx)
+        if hit is None or hit[0] != sid:
+            ctx = IndexContext.open(self.query_spark, store)
+            # shuffle partitions sized to the index, not the session default
+            # (round 6): every query-path exchange keys on shard_id (scorer
+            # cogroups, gate frames), whose cardinality IS num_shards —
+            # partitions beyond that are empty JVM tasks. Spark skips the
+            # Python runner for an empty partition, so each costs only task
+            # scheduling (29 empty of 32 partitions added 25-50 ms to a
+            # 3-group applyInPandas on local[3]); the fixed cost of a
+            # non-empty Python task is the worker's per-task setup (see
+            # _zipimport_guard). Scale-adaptive by construction: a 100 TB
+            # table has thousands of shards and gets thousands of partitions.
+            shuffle_partitions = max(8, int(ctx.meta.get("num_shards", 8)))
+            # pin the split size just above the largest postings file
+            # (round 6): the zero-exchange WAND stream path
+            # (wand._shard_stream_runner) requires that no parquet file is
+            # ever SPLIT across scan tasks — a split would separate a doc's
+            # postings from its gate evidence. One listing per snapshot
+            # (cached with the context); the +1 MB headroom matches
+            # openCostInBytes so same-size sibling files over the 4 MB floor
+            # don't pack two to a task (one file per task, the
+            # shard-granular layout queries want at scale; smaller files
+            # pack up to the floor, which packing order makes harmless).
+            # Spark splits at min(maxPartitionBytes, max(openCostInBytes,
+            # totalBytes / minPartitionNum)), and minPartitionNum defaults to
+            # the task slots: with more slots than postings files that cap
+            # falls below the pin and splits files of several row groups.
+            # minPartitionNum=1 makes the pin the cap.
+            pin = max(4 << 20, store.largest_postings_file() + (1 << 20) + 1)
+            confs = {
+                "spark.sql.shuffle.partitions": str(shuffle_partitions),
+                "spark.sql.files.maxPartitionBytes": str(pin),
+                "spark.sql.files.minPartitionNum": "1",
+            }
+            hit = (sid, ctx, confs)
+            self._ctx_cache[key] = hit
+        _, ctx, confs = hit
+        for k, v in confs.items():
+            self.query_spark.conf.set(k, v)
         return ctx
 
     # ---- table lifecycle (reference createTable, TableSettings) ---------

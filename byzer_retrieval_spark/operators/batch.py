@@ -51,6 +51,10 @@ from pyspark.sql import functions as F
 
 from byzer_retrieval_spark.operators.context import IndexContext
 from byzer_retrieval_spark.operators.decode import decode_rows
+from byzer_retrieval_spark.operators.wand import (
+    _shard_stream_runner,
+    scan_blocks,
+)
 from byzer_retrieval_spark.plans.query import (
     ParsedKeyword,
     SearchQuery,
@@ -211,8 +215,8 @@ def _make_batch_scorer(
         for (fld, term), g in pdf.groupby(["field", "term"], sort=False):
             g = g.sort_values("first_doc")
             n_docs, avgdl = fs(fld)
-            # df_map (round 6): driver-resolved term dictionary — the
-            # zero-exchange stream frame carries no df column
+            # df_map: the driver-read term map (global stats); the
+            # per_shard_stats scan carries a shard-keyed df column
             df = (
                 df_map[(fld, term)]
                 if df_map is not None
@@ -798,19 +802,15 @@ def _batch_per_shard(ctx: IndexContext, queries: List[SearchQuery]):
     tomb = ctx.tombstones_df()
 
     def _frame(sub_specs, sub_gate_parts, stream):
-        """One per-shard winners frame for a spec subset: the
-        zero-exchange mapInArrow stream (round 6, see
-        wand._shard_stream_runner for the correctness argument) or the
-        exchange-based groupBy/cogroup shape for gated /
-        per-shard-stats / tombstoned runs."""
+        """One per-shard winners frame for a spec subset, over the
+        scan and df source of wand.scan_blocks: the zero-exchange
+        mapInArrow stream (round 6, see wand._shard_stream_runner for
+        the correctness argument) or the exchange-based
+        groupBy/cogroup shape for gated / per-shard-stats / tombstoned
+        runs."""
         fields, all_terms, prefix_stems, phrase_terms = _scan_inputs(
             sub_specs
         )
-        term_pred = (
-            F.col("term").isin(all_terms) if all_terms else F.lit(False)
-        )
-        for stem in prefix_stems:
-            term_pred = term_pred | F.col("term").startswith(stem)
         block_cols = [
             "shard_id", "field", "term", "first_doc", "doc_gaps", "tfs",
             "dls",
@@ -818,111 +818,18 @@ def _batch_per_shard(ctx: IndexContext, queries: List[SearchQuery]):
         if phrase_terms:
             # positions read ONLY when the sub-batch has a phrase clause
             block_cols.append("positions")
-        base = ctx.postings().filter(
-            F.col("field").isin(fields) & term_pred
+        blocks, df_map, field_stats = scan_blocks(
+            ctx, fields, all_terms, prefix_stems, block_cols
         )
-        if stream:
-            from byzer_retrieval_spark.operators.wand import (
-                _shard_stream_runner,
-            )
-
-            # df resolution, cheapest first (round 6): driver-side
-            # pyarrow read of the exact candidate terms' dictionary
-            # entries, captured into the scorer closure — no df column,
-            # no broadcast job; broadcast fallback otherwise
-            df_map = ctx.term_dfs(fields, all_terms)
-            if df_map is not None:
-                blocks = base.select(*block_cols)
-            else:
-                stats = ctx.stats()
-                spred = F.col("field").isin(fields)
-                if all_terms:
-                    spred = spred & F.col("term").isin(all_terms)
-                    if "len_bucket" in stats.columns:
-                        spred = spred & F.col("len_bucket").isin(
-                            sorted({len(t) for t in all_terms})
-                        )
-                else:
-                    spred = F.lit(False)
-                stats_sel = stats.filter(spred).select(
-                    "field", "term", "df"
-                )
-                blocks = base.select(*block_cols).join(
-                    F.broadcast(stats_sel), ["field", "term"], "left"
-                )
-            field_stats = {
-                f: (float(ctx.n_docs(f)), float(ctx.avgdl(f)))
-                for f in fields
-            }
-            grouped, _ = _make_batch_scorer(
-                field_stats, sub_specs, ctx.k1, ctx.b, phrase_terms,
-                ctx.docid_id_order, per_shard_stats=False,
-                df_map=df_map,
-            )
-            return blocks.mapInArrow(
-                _shard_stream_runner(grouped), schema=_OUT_SCHEMA
-            )
-        # Same shape choice as wand.search_wand (round 6): window-df
-        # from the scan unless prefix stems make the term set unbounded.
-        stats_by_window = not prefix_stems
-        sub_df_map = None
-        if ctx.per_shard_stats:
-            # per-shard-stats mode (round 5 — reference numNodes>1
-            # parity in the one-job batch): per-(field, term, shard) df
-            # from the same scan, per-shard N/avgdl from the snapshot
-            if stats_by_window:
-                blocks = base.select(*block_cols, "df_block").withColumn(
-                    "df",
-                    F.sum("df_block").over(
-                        Window.partitionBy("field", "term", "shard_id")
-                    ),
-                ).drop("df_block")
-            else:
-                stats = base.groupBy("field", "term", "shard_id").agg(
-                    F.sum("df_block").alias("df")
-                )
-                blocks = base.select(*block_cols).join(
-                    F.broadcast(stats), ["field", "term", "shard_id"]
-                )
-            field_stats = {
-                f: {
-                    int(s): (float(st["n_docs"]), float(st["avgdl"]))
-                    for s, st in ctx.shard_field_stats(f).items()
-                }
-                for f in fields
-            }
-        else:
-            # gated global-stats sub-batches also take the driver-
-            # resolved df map when available (round 6) — the window-df
-            # exchange (or broadcast job) drops out of the gated frame
-            sub_df_map = ctx.term_dfs(fields, all_terms)
-            if sub_df_map is not None:
-                blocks = base.select(*block_cols)
-            elif stats_by_window:
-                blocks = base.select(*block_cols, "df_block").withColumn(
-                    "df",
-                    F.sum("df_block").over(
-                        Window.partitionBy("field", "term")
-                    ),
-                ).drop("df_block")
-            else:
-                stats = (
-                    ctx.stats()
-                    .filter(F.col("field").isin(fields) & term_pred)
-                    .select("field", "term", "df")
-                )
-                blocks = base.select(*block_cols).join(
-                    F.broadcast(stats), ["field", "term"]
-                )
-            field_stats = {
-                f: (float(ctx.n_docs(f)), float(ctx.avgdl(f)))
-                for f in fields
-            }
         grouped, cogrouped = _make_batch_scorer(
             field_stats, sub_specs, ctx.k1, ctx.b, phrase_terms,
             ctx.docid_id_order, per_shard_stats=ctx.per_shard_stats,
-            df_map=sub_df_map,
+            df_map=df_map,
         )
+        if stream:
+            return blocks.mapInArrow(
+                _shard_stream_runner(grouped), schema=_OUT_SCHEMA
+            )
 
         # gate side: per-query allow sets (tagged query_id) + the shared
         # tombstone deny set for ungated queries — ONE cogroup on
@@ -957,11 +864,7 @@ def _batch_per_shard(ctx: IndexContext, queries: List[SearchQuery]):
     # through the gate cogroup (round 6): ungated specs ride the
     # zero-exchange stream frame, gated specs keep their cogroup —
     # the two frames union into the same downstream rank/join.
-    can_stream = (
-        tomb is None
-        and not ctx.per_shard_stats
-        and getattr(ctx, "_stream_safe", False)
-    )
+    can_stream = tomb is None and not ctx.per_shard_stats
     gated_specs = [s for s in specs if s["gated"]]
     ungated_specs = [s for s in specs if not s["gated"]]
     if can_stream and not gated_specs:

@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Any, Dict, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,6 +40,9 @@ class IndexContext:
     store: IndexStore
     meta: Dict[str, Any]
     snapshot: Dict[str, Any]
+    _memos: Dict[str, Any] = field(
+        default_factory=dict, init=False, repr=False, compare=False
+    )
 
     @classmethod
     def open(cls, spark: SparkSession, store: IndexStore) -> "IndexContext":
@@ -57,11 +60,10 @@ class IndexContext:
     # and the engine opens a fresh context), so the cached plans can
     # never see stale file sets.
     def _memo(self, key: str, build):
-        cache = self.__dict__.setdefault("_reader_memo", {})
-        hit = cache.get(key, _MISS)
+        hit = self._memos.get(key, _MISS)
         if hit is _MISS:
             hit = build()
-            cache[key] = hit
+            self._memos[key] = hit
         return hit
 
     def docs(self) -> DataFrame:
@@ -73,15 +75,11 @@ class IndexContext:
     def stats(self) -> DataFrame:
         return self._memo("stats", lambda: self.store.stats(self.spark))
 
-    def tombstone_ids(self) -> List[int]:
-        return self.store.tombstone_ids(self.spark)
-
     def tombstones_df(self) -> Optional[DataFrame]:
         """Tombstoned doc ids as a DataFrame(__docid) — None when none
-        exist. Query paths must use this (anti-join), never
-        ``tombstone_ids`` (a driver collect that inlines every deleted
-        id as a plan literal — a driver bottleneck at millions of
-        deletes)."""
+        exist. Query paths anti-join against it; nothing collects the
+        ids to the driver (inlining every deleted id as a plan literal
+        is a driver bottleneck at millions of deletes)."""
         return self._memo("tombstones", lambda: self.store.tombstones(self.spark))
 
     def exclude_tombstones(self, df: DataFrame) -> DataFrame:
@@ -154,50 +152,34 @@ class IndexContext:
         drop = {"__docid", "shard_id"}
         return [c for c in self.docs().columns if c not in drop]
 
-    def term_dfs(self, fields, terms):
+    def term_dfs(self, fields, terms) -> TermDfs:
         """{(field, term): df} for an EXACT term list, read driver-side
         via pyarrow with (field, len_bucket) partition pruning + term
         row-group pruning (round 6). The stats table is the term
         dictionary — metadata-scale — and a query touches a handful of
-        terms, so this is a 2-10 ms driver read that replaces a whole
-        broadcast-build job on the zero-exchange paths (exactly like
-        Lucene reading its term dictionary on the searcher). Returns
-        None when the read is not possible (non-local store, pre-r4
-        layout without len_bucket) — callers fall back to the broadcast
-        stats join."""
+        terms, so this is a 2-10 ms driver read and the only df source
+        of the global-stats scorers (exactly like Lucene reading its
+        term dictionary on the searcher). Every build and mutation
+        writes the table through ``IndexStore.write_stats``, so the
+        ``len_bucket`` partitioning is always there; the dataset is
+        opened once per context."""
         terms = list(dict.fromkeys(terms))
         if not terms:
             return TermDfs((), self.store.stats_path)
-        cache = self.__dict__.setdefault("_dfs_ds", {})
-        d = cache.get("ds", _MISS)
-        if d is _MISS:
-            try:
-                import pyarrow.dataset as _ds
-
-                d = _ds.dataset(
-                    self.store.stats_path, format="parquet",
-                    partitioning="hive",
-                )
-                if "len_bucket" not in d.schema.names:
-                    d = None
-            except Exception:
-                d = None
-            cache["ds"] = d
-        if d is None:
-            return None
         import pyarrow.dataset as _ds
 
-        try:
-            tbl = d.to_table(
-                filter=_ds.field("field").isin(list(fields))
-                & _ds.field("len_bucket").isin(
-                    sorted({len(t) for t in terms})
-                )
-                & _ds.field("term").isin(terms),
-                columns=["field", "term", "df"],
-            )
-        except Exception:
-            return None
+        d = self._memo(
+            "stats_dataset",
+            lambda: _ds.dataset(
+                self.store.stats_path, format="parquet", partitioning="hive"
+            ),
+        )
+        tbl = d.to_table(
+            filter=_ds.field("field").isin(list(fields))
+            & _ds.field("len_bucket").isin(sorted({len(t) for t in terms}))
+            & _ds.field("term").isin(terms),
+            columns=["field", "term", "df"],
+        )
         return TermDfs(
             (
                 ((f, t), float(v))

@@ -412,12 +412,13 @@ def _make_shard_scorer(
     per_shard_stats: bool = False,
     df_map: Optional[Dict[Tuple[str, str], float]] = None,
 ):
-    """idf is derived in-task from the broadcast-joined ``df`` column —
-    no eager stats collect on the driver, so a whole search is ONE job.
+    """idf is derived in-task from ``df_map`` (the driver-read term
+    map, see scan_blocks), or from the scan's ``df`` column when
+    ``df_map`` is None.
 
     ``per_shard_stats`` (round 5 — reference numNodes>1 parity on the
     FAST path): ``field_stats`` values are {shard_id: (n_docs, avgdl)}
-    instead of (n_docs, avgdl), and the joined ``df`` column is already
+    instead of (n_docs, avgdl), and the ``df`` column is already
     per-shard — every shard then scores like an independent index. All
     pruning stays lossless because every bound this scorer computes is
     already shard-local; only the (N, avgdl, df) inputs change.
@@ -540,8 +541,8 @@ def _make_shard_scorer(
         for (fld, term), g in sc_pdf.groupby(["field", "term"], sort=False):
             g = g.sort_values("first_doc")
             n_docs, avgdl = fs(fld)
-            # df_map (round 6): driver-resolved term dictionary entries
-            # — the zero-exchange path carries no df column at all
+            # df_map: the driver-read term map (global stats); the
+            # per_shard_stats scan carries a shard-keyed df column
             df = (
                 df_map[(fld, term)]
                 if df_map is not None
@@ -1288,8 +1289,8 @@ def _shard_stream_runner(score_shard):
     possible global winners (global top-k ⊆ union of per-group top-k
     for any doc partition), and the global (score desc, _id asc)
     orderBy + limit downstream settles the final ranking exactly as it
-    already must for boundary ties. df/idf are global (broadcast-joined
-    onto the scanned rows), so partial groups score identically."""
+    already must for boundary ties. df/idf are global (the driver's
+    term map, see scan_blocks), so partial groups score identically."""
 
     def gen(batches):
         import pyarrow as pa
@@ -1326,6 +1327,56 @@ def _shard_stream_runner(score_shard):
             yield from run(carry)
 
     return gen
+
+
+def scan_blocks(ctx: IndexContext, fields, terms, stems, cols):
+    """The postings scan a keyword query — or a batch of them — scores,
+    and where its df comes from: (blocks, df_map, field_stats).
+
+    The term predicate (exact terms ``isin`` plus prefix ``startswith``
+    stems) pushes down to the term-sorted postings row groups. With
+    global stats df is the driver-read term map (``term_dfs``) captured
+    into the scorer closure, so the scan is a plain select; rows reached
+    only through a prefix stem have no entry and their constant-score
+    clauses never read one. ``per_shard_stats`` indexes score each shard
+    with its own df (reference numNodes>1 parity), summed per (field,
+    term, shard) from the same scan: a window, or — when prefix stems
+    make the scanned term set unbounded and the window's exchange+sort
+    of the whole scan costs more (measured q_prefix 0.5s → 0.86s) — a
+    groupBy joined back as a broadcast. The term predicate prunes by
+    term, never by shard, so the scan holds every block of a candidate
+    term and the sums are exact."""
+    term_pred = F.col("term").isin(terms) if terms else F.lit(False)
+    for stem in stems:
+        term_pred = term_pred | F.col("term").startswith(stem)
+    base = ctx.postings().filter(F.col("field").isin(fields) & term_pred)
+    if not ctx.per_shard_stats:
+        field_stats = {
+            f: (float(ctx.n_docs(f)), float(ctx.avgdl(f))) for f in fields
+        }
+        return base.select(*cols), ctx.term_dfs(fields, terms), field_stats
+    field_stats = {
+        f: {
+            int(s): (float(st["n_docs"]), float(st["avgdl"]))
+            for s, st in ctx.shard_field_stats(f).items()
+        }
+        for f in fields
+    }
+    if stems:
+        stats = base.groupBy("field", "term", "shard_id").agg(
+            F.sum("df_block").alias("df")
+        )
+        blocks = base.select(*cols).join(
+            F.broadcast(stats), ["field", "term", "shard_id"]
+        )
+    else:
+        blocks = base.select(*cols, "df_block").withColumn(
+            "df",
+            F.sum("df_block").over(
+                Window.partitionBy("field", "term", "shard_id")
+            ),
+        ).drop("df_block")
+    return blocks, None, field_stats
 
 
 _EMPTY_G = np.empty(0, dtype=np.int64)
@@ -1451,22 +1502,11 @@ def search_wand(ctx: IndexContext, query: SearchQuery) -> Optional[DataFrame]:
 
     # term predicate: exact terms + prefix stems + fuzzy expansions —
     # all push down to the postings scan (In / StringStartsWith on
-    # term-sorted row groups)
+    # term-sorted row groups). A MUST term absent from the corpus simply
+    # never satisfies the must-count gate (no postings → no rows),
+    # matching Lucene.
     fuzzy_terms = [t for _, ts, _ in termset_specs for t in ts]
     in_terms = list(dict.fromkeys(all_terms + fuzzy_terms))
-    term_pred = F.col("term").isin(in_terms) if in_terms else F.lit(False)
-    for _, stem, _ in prefix_specs:
-        term_pred = term_pred | F.col("term").startswith(stem)
-
-    # term stats come from the SAME term-pruned blocks scan (round 6):
-    # the term predicate prunes by term, never by shard, so the scan
-    # always holds every block of a candidate term and
-    # sum(df_block) over (field, term) IS the stats-table df — a window
-    # over the scanned blocks replaces the stats parquet scan and its
-    # broadcast-build job (one fewer sequential job per query; the
-    # window's exchange pipelines inside the main job). A MUST term
-    # absent from the corpus simply never satisfies the must-count gate
-    # (no postings → no rows), matching Lucene.
     block_cols = [
         "shard_id", "field", "term", "first_doc", "last_doc",
         "max_tf", "min_dl", "doc_gaps", "tfs", "dls",
@@ -1475,131 +1515,12 @@ def search_wand(ctx: IndexContext, query: SearchQuery) -> Optional[DataFrame]:
         # positions read ONLY for phrase queries (column pruning keeps
         # the extra varbyte column off every non-phrase scan)
         block_cols.append("positions")
-    base = ctx.postings().filter(F.col("field").isin(fields) & term_pred)
+    blocks, df_map, field_stats = scan_blocks(
+        ctx, fields, in_terms, [stem for _, stem, _ in prefix_specs],
+        block_cols,
+    )
 
     gate_df, gate_mode = gate_frame(ctx, query.filters, ctx.doc_bits)
-
-    # ---- zero-exchange stream path (round 6, guide §2.4) -------------
-    # Ungated global-stats queries (no filters, no tombstones, not
-    # per_shard_stats) score straight off the partition-pruned scan via
-    # mapInArrow: no window-df exchange, no shard cogroup exchange. df
-    # comes from a broadcast of the stats table pruned to the exact
-    # candidate terms (len_bucket partition filters); rows reached only
-    # through a prefix stem keep a null df (their clauses score the
-    # constant 1.0 and never read it). Correct for partial shard groups
-    # — see _shard_stream_runner. api.query_ctx pins
-    # spark.sql.files.maxPartitionBytes above the largest postings file
-    # so no file splits across tasks.
-    if (
-        gate_mode == "none"
-        and not ctx.per_shard_stats
-        and getattr(ctx, "_stream_safe", False)
-    ):
-        # df resolution, cheapest first (round 6): the exact candidate
-        # terms' dictionary entries read DRIVER-side via pyarrow
-        # (2-10 ms, partition + row-group pruned) and captured into the
-        # scorer closure — no df column, no broadcast job at all. Falls
-        # back to a broadcast of the pruned stats table when the
-        # driver-side read is unavailable.
-        df_map = ctx.term_dfs(fields, in_terms)
-        if df_map is not None:
-            blocks = base.select(*block_cols)
-        else:
-            stats = ctx.stats()
-            spred = F.col("field").isin(fields)
-            if in_terms:
-                spred = spred & F.col("term").isin(in_terms)
-                if "len_bucket" in stats.columns:
-                    spred = spred & F.col("len_bucket").isin(
-                        sorted({len(t) for t in in_terms})
-                    )
-            else:
-                spred = F.lit(False)
-            stats_sel = stats.filter(spred).select("field", "term", "df")
-            blocks = base.select(*block_cols).join(
-                F.broadcast(stats_sel), ["field", "term"], "left"
-            )
-        field_stats = {
-            f: (float(ctx.n_docs(f)), float(ctx.avgdl(f))) for f in fields
-        }
-        scorer = _make_shard_scorer(
-            field_stats,
-            tuple(parsed.scoring_terms),
-            tuple(parsed.must),
-            tuple(parsed.must_not),
-            k,
-            ctx.k1,
-            ctx.b,
-            "none",
-            phrase_specs,
-            prefix_specs,
-            termset_specs,
-            scorer_groups,
-            docid_id_order=ctx.docid_id_order,
-            bool_group_specs=tuple(bg_specs),
-            per_shard_stats=False,
-            df_map=df_map,
-        )
-        return blocks.mapInArrow(
-            _shard_stream_runner(scorer), schema=_OUT_SCHEMA
-        )
-
-    # Prefix clauses make the scanned term set unbounded (startswith) —
-    # there the window's exchange+sort of the whole scan costs more
-    # than the broadcast job it saves (measured q_prefix 0.5s → 0.86s),
-    # so prefix queries keep the broadcast-stats shape.
-    stats_by_window = not prefix_specs
-    df_map = None
-    if ctx.per_shard_stats:
-        # per-shard-stats mode (round 5 — reference numNodes>1 parity
-        # on the FAST path): df per (field, term, SHARD) from the same
-        # scan, N/avgdl per shard from the snapshot — every WAND bound
-        # is already shard-local, so the block-max proof holds shard by
-        # shard with these inputs
-        if stats_by_window:
-            blocks = base.select(*block_cols, "df_block").withColumn(
-                "df",
-                F.sum("df_block").over(
-                    Window.partitionBy("field", "term", "shard_id")
-                ),
-            ).drop("df_block")
-        else:
-            stats = base.groupBy("field", "term", "shard_id").agg(
-                F.sum("df_block").alias("df")
-            )
-            blocks = base.select(*block_cols).join(
-                F.broadcast(stats), ["field", "term", "shard_id"]
-            )
-        field_stats = {
-            f: {
-                int(s): (float(st["n_docs"]), float(st["avgdl"]))
-                for s, st in ctx.shard_field_stats(f).items()
-            }
-            for f in fields
-        }
-    else:
-        # gated global-stats queries also take the driver-resolved df
-        # map when available (round 6): the window-df exchange (or the
-        # broadcast job) drops out of the filtered path too; only
-        # per_shard_stats mode genuinely needs the shard-keyed window
-        df_map = ctx.term_dfs(fields, in_terms)
-        if df_map is not None:
-            blocks = base.select(*block_cols)
-        elif stats_by_window:
-            blocks = base.select(*block_cols, "df_block").withColumn(
-                "df",
-                F.sum("df_block").over(Window.partitionBy("field", "term")),
-            ).drop("df_block")
-        else:
-            stats = ctx.stats().filter(
-                F.col("field").isin(fields) & term_pred
-            ).select("field", "term", "df")
-            blocks = base.select(*block_cols).join(
-                F.broadcast(stats), ["field", "term"]
-            )
-        field_stats = {
-            f: (float(ctx.n_docs(f)), float(ctx.avgdl(f))) for f in fields
-        }
     scorer = _make_shard_scorer(
         field_stats,
         tuple(parsed.scoring_terms),
@@ -1618,6 +1539,18 @@ def search_wand(ctx: IndexContext, query: SearchQuery) -> Optional[DataFrame]:
         per_shard_stats=ctx.per_shard_stats,
         df_map=df_map,
     )
+    # Three frames. Ungated global-stats queries (no filters, no
+    # tombstones) score straight off the partition-pruned scan via
+    # mapInArrow (round 6, guide §2.4): zero exchanges, correct for
+    # partial shard groups — see _shard_stream_runner; api.query_ctx
+    # pins spark.sql.files.maxPartitionBytes above the largest postings
+    # file so no file splits across tasks. per_shard_stats queries
+    # group the scan by shard (their df column is shard-keyed); gated
+    # queries cogroup it with the per-shard allow/deny doc ids.
+    if gate_mode == "none" and not ctx.per_shard_stats:
+        return blocks.mapInArrow(
+            _shard_stream_runner(scorer), schema=_OUT_SCHEMA
+        )
     if gate_mode == "none":
         return blocks.groupBy("shard_id").applyInPandas(scorer, schema=_OUT_SCHEMA)
     return (

@@ -37,7 +37,7 @@ import shutil
 import tempfile
 import time
 from dataclasses import dataclass
-from typing import Any, Dict, List, Optional
+from typing import Any, Dict, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -151,6 +151,18 @@ class IndexStore:
     def stats(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.stats_path)
 
+    def largest_postings_file(self) -> int:
+        """Size in bytes of the largest file under postings/ (0 when
+        there is none) — what the query path's split pin must exceed."""
+        return max(
+            (
+                os.path.getsize(os.path.join(d, f))
+                for d, _, files in os.walk(self.postings_path)
+                for f in files
+            ),
+            default=0,
+        )
+
     def write_stats(self, stats_df: DataFrame) -> None:
         """Write the (field, term, df, cf) term-dictionary/stats table
         PARTITIONED BY (field, len_bucket = length(term)), term-sorted
@@ -173,12 +185,6 @@ class IndexStore:
         if not _has_parquet(self.tombstones_path):
             return None
         return spark.read.parquet(self.tombstones_path)
-
-    def tombstone_ids(self, spark: SparkSession) -> List[int]:
-        df = self.tombstones(spark)
-        if df is None:
-            return []
-        return [r["__docid"] for r in df.select("__docid").distinct().collect()]
 
     # -- lifecycle -------------------------------------------------------
     def truncate(self) -> None:

@@ -86,17 +86,17 @@ def test_analyzed_field_range_filter_rejected(corpus_engine):
 
 
 def test_no_driver_side_tombstone_literals():
-    """Query paths must not collect tombstones to the driver: the only
-    remaining tombstone_ids() caller is compact() (a maintenance op)."""
+    """Nothing collects tombstones to the driver as a list of ids: query
+    paths anti-join against IndexContext.tombstones_df() and compact()
+    against the tombstone table itself."""
     import pathlib
     import re
 
     root = pathlib.Path(__file__).resolve().parents[1] / "byzer_retrieval_spark"
-    offenders = []
-    for p in root.rglob("*.py"):
-        for i, line in enumerate(p.read_text().splitlines(), 1):
-            if re.search(r"tombstone_ids\(", line) and "def tombstone_ids" not in line:
-                rel = f"{p.relative_to(root)}:{i}"
-                if p.name not in ("mutate.py", "context.py", "storage.py"):
-                    offenders.append(rel)
+    offenders = [
+        f"{p.relative_to(root)}:{i}"
+        for p in root.rglob("*.py")
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if re.search(r"tombstone_ids\(", line)
+    ]
     assert not offenders, offenders
