@@ -46,6 +46,7 @@ from typing import Dict, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -585,10 +586,10 @@ def _make_batch_scorer(
             }
         )
 
-    def grouped(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def grouped(key, pdf):
         return score_shard(pdf, None)
 
-    def cogrouped(key, pdf: pd.DataFrame, gate_pdf: pd.DataFrame) -> pd.DataFrame:
+    def cogrouped(key, pdf, gate_pdf):
         if not len(pdf):
             return pd.DataFrame(
                 {"query_id": [], "shard_id": [], "__docid": [], "score": []}
@@ -828,7 +829,12 @@ def _batch_per_shard(ctx: IndexContext, queries: List[SearchQuery]):
         )
         if stream:
             return blocks.mapInArrow(
-                _shard_stream_runner(grouped), schema=_OUT_SCHEMA
+                _shard_stream_runner(
+                    lambda key, t: pa.Table.from_pandas(
+                        grouped(key, t.to_pandas()), preserve_index=False
+                    )
+                ),
+                schema=_OUT_SCHEMA,
             )
 
         # gate side: per-query allow sets (tagged query_id) + the shared

@@ -148,9 +148,21 @@ class IndexContext:
     def avgdl(self, field: str) -> float:
         return float(self.field_stat(field)["avgdl"])
 
+    def docs_files(self) -> Dict[int, List[str]]:
+        """{shard_id: docs parquet files} of this snapshot, listed once."""
+        return self._memo("docs_files", self.store.docs_files)
+
+    def docs_schema(self):
+        """Arrow schema of the docs files (``__docid`` and the stored
+        columns; ``shard_id`` is the partition directory), read from one
+        file's footer: no Spark docs reader is built."""
+        import pyarrow.parquet as pq
+
+        first = next(f for fs in self.docs_files().values() for f in fs)
+        return self._memo("docs_schema", lambda: pq.read_schema(first).remove_metadata())
+
     def stored_columns(self) -> List[str]:
-        drop = {"__docid", "shard_id"}
-        return [c for c in self.docs().columns if c not in drop]
+        return [c for c in self.docs_schema().names if c != "__docid"]
 
     def term_dfs(self, fields, terms) -> TermDfs:
         """{(field, term): df} for an EXACT term list, read driver-side

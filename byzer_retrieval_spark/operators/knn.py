@@ -52,8 +52,9 @@ def vector_topk(ctx: IndexContext, query: SearchQuery) -> DataFrame:
 
 def vector_winners(ctx: IndexContext, query: SearchQuery) -> DataFrame:
     """Exact-KNN top-k carrying the docs physical key: (shard_id,
-    __docid, _id, _score) — the hybrid-fusion recall frame (see
-    wand.search_winners)."""
+    __docid, _id, _score) — the hybrid-fusion recall frame, the vector
+    side of wand.search_winners, whose scorer task reads the keyword
+    winners' ``_id`` from the docs files itself."""
     from byzer_retrieval_spark.operators.filtering import filtered_docs
 
     cand = filtered_docs(ctx, query.filters)

@@ -43,6 +43,7 @@ from typing import Dict, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -510,7 +511,7 @@ def _make_shard_scorer(
     not_set = set(not_terms)
     _EMPTY = np.empty(0, dtype=np.int64)
 
-    def score_shard(key, pdf: pd.DataFrame, gate_docs: np.ndarray) -> pd.DataFrame:
+    def score_shard(key, pdf, gate_docs=_EMPTY):
         shard_id = int(key[0])
 
         def fs(fld: str) -> Tuple[float, float]:
@@ -1236,8 +1237,8 @@ def _make_shard_scorer(
                 # beats the k-th best. After an upsert doc_id order !=
                 # _id order (delta ids above the shard high-water
                 # mark), so equal-score ties at the k boundary must be
-                # settled by search_fast's global (score desc, _id asc)
-                # orderBy, not here.
+                # settled by a (score desc, _id asc) cut on the docs'
+                # _id (_winner_rows), not here.
                 keep = scores_f >= kth
                 docs_f, scores_f = docs_f[keep], scores_f[keep]
         order = np.lexsort((docs_f, -scores_f))
@@ -1250,32 +1251,15 @@ def _make_shard_scorer(
             }
         )
 
-    if gate_mode == "none":
-
-        def grouped(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            return score_shard(key, pdf, _EMPTY)
-
-        return grouped
-
-    def cogrouped(key, blocks_pdf: pd.DataFrame, gate_pdf: pd.DataFrame) -> pd.DataFrame:
-        gate_docs = (
-            gate_pdf["__docid"].to_numpy(np.int64) if len(gate_pdf) else _EMPTY
-        )
-        if not len(blocks_pdf):
-            return pd.DataFrame({"shard_id": [], "__docid": [], "score": []}).astype(
-                {"shard_id": np.int32, "__docid": np.int64, "score": np.float64}
-            )
-        return score_shard(key, blocks_pdf, gate_docs)
-
-    return cogrouped
+    return score_shard
 
 
-def _shard_stream_runner(score_shard):
-    """mapInArrow wrapper running the per-shard scorer straight off the
-    partition-pruned postings scan — ZERO exchanges (round 6, guide
-    §2.4). The scan's rows arrive file-by-file; each contiguous run of
-    one shard_id value is scored as its own group (the trailing run
-    carries across Arrow batches).
+def _shard_stream_runner(task):
+    """mapInArrow wrapper running a per-shard task ``task(key, table)``
+    (Arrow in, Arrow out) straight off the partition-pruned postings
+    scan — ZERO exchanges (round 6, guide §2.4). The scan's rows arrive
+    file-by-file; each contiguous run of one shard_id value is scored as
+    its own group (the trailing run carries across Arrow batches).
 
     Correctness without the shard exchange: every doc's complete
     evidence (all its postings for every candidate term, including
@@ -1287,22 +1271,19 @@ def _shard_stream_runner(score_shard):
     order) only partitions its DOCS across groups; per-group exact
     scoring + per-group top-k then emits a SUPERSET of the shard's
     possible global winners (global top-k ⊆ union of per-group top-k
-    for any doc partition), and the global (score desc, _id asc)
-    orderBy + limit downstream settles the final ranking exactly as it
-    already must for boundary ties. df/idf are global (the driver's
-    term map, see scan_blocks), so partial groups score identically."""
+    for any doc partition under one total order), so the task's own
+    (score desc, _id asc) cut and the global top-k downstream settle
+    the final ranking exactly. df/idf are global (the driver's term
+    map, see scan_blocks), so partial groups score identically."""
 
     def gen(batches):
-        import pyarrow as pa
-
         pa.set_cpu_count(1)
         carry = None
 
         def run(tbl):
-            pdf = tbl.to_pandas()
-            out = score_shard((int(pdf["shard_id"].iloc[0]),), pdf)
-            if len(out):
-                yield pa.RecordBatch.from_pandas(out, preserve_index=False)
+            out = task((tbl.column("shard_id")[0],), tbl)
+            if out.num_rows:
+                yield from out.to_batches()
 
         for rb in batches:
             tbl = pa.Table.from_batches([rb])
@@ -1327,6 +1308,62 @@ def _shard_stream_runner(score_shard):
             yield from run(carry)
 
     return gen
+
+
+def _shard_task(score_shard, k, docs=None):
+    """The one task body of the three scorer frames (stream, grouped
+    ``per_shard_stats``, gate cogroup): ``task(key, blocks, gate)``
+    scores a shard group's posting blocks (``gate``: its allow/deny
+    ``__docid`` table, or None) and emits its winners (shard_id,
+    __docid, score) or, with ``docs`` = (docs files by shard, their
+    Arrow schema, the output Arrow schema), their rows (_winner_rows)."""
+
+    def task(key, blocks, gate):
+        pa.set_cpu_count(1)
+        shard = key[0].as_py()
+        gate = () if gate is None else (gate.column("__docid").to_numpy(),)
+        win = score_shard((shard,), blocks.to_pandas(), *gate)
+        if docs is None:
+            return pa.Table.from_pandas(win, preserve_index=False)
+        return _winner_rows(shard, win, k, *docs)
+
+    return task
+
+
+def _winner_rows(shard, win, k, files, file_schema, out_schema):
+    """``_score`` plus the docs columns of a shard group's winners, read
+    from the shard's own docs files with pyarrow: a ``__docid`` ``isin``
+    plus the ids' min/max range, which prunes row groups (docs are
+    sorted by ``__docid``). More than k winners means the scorer kept
+    its boundary ties (``docid_id_order`` False after upserts): ``_id``
+    is read alone and the group cut to k by (score desc, _id asc) before
+    the rest is read. That is exact on partial shard groups too, since
+    the global top-k lies in the union of the per-group top-k under one
+    total order."""
+    import pyarrow.dataset as ds
+
+    docids, scores = win["__docid"].to_numpy(np.int64), win["score"].to_numpy()
+    if not docids.size:
+        return out_schema.empty_table()
+    d = ds.dataset(files[shard], schema=file_schema, format="parquet")
+
+    def read(cols):
+        f = ds.field("__docid")
+        hit = (f >= int(docids.min())) & (f <= int(docids.max())) & f.isin(docids)
+        tbl = d.to_table(columns=cols, filter=hit, use_threads=False)
+        order = np.argsort(docids)
+        at = np.searchsorted(docids[order], tbl.column("__docid").to_numpy())
+        return tbl.append_column("_score", pa.array(scores[order[at]]))
+
+    if docids.size > k:
+        ids = read(["__docid", "_id"]).sort_by(
+            [("_score", "descending"), ("_id", "ascending")]
+        ).slice(0, k)
+        docids, scores = ids["__docid"].to_numpy(), ids["_score"].to_numpy()
+    names = out_schema.names
+    tbl = read(["__docid"] + [c for c in names if c not in ("_score", "shard_id", "__docid")])
+    tbl = tbl.append_column("shard_id", pa.array(np.full(tbl.num_rows, shard, np.int32)))
+    return tbl.select(names).cast(out_schema)
 
 
 def scan_blocks(ctx: IndexContext, fields, terms, stems, cols):
@@ -1379,12 +1416,14 @@ def scan_blocks(ctx: IndexContext, fields, terms, stems, cols):
     return blocks, None, field_stats
 
 
-_EMPTY_G = np.empty(0, dtype=np.int64)
-
-
-def search_wand(ctx: IndexContext, query: SearchQuery) -> Optional[DataFrame]:
-    """Fast keyword top-k, filtered or not. Returns None when this path
-    doesn't apply (match-all or empty queries → DataFrame path).
+def search_wand(
+    ctx: IndexContext, query: SearchQuery, columns=None
+) -> Optional[DataFrame]:
+    """Fast keyword scorer job, filtered or not: one task per shard group
+    (_shard_task) emitting its winners (shard_id, __docid, score) or,
+    with ``columns``, ``_score`` plus those docs columns. Returns None
+    when this path doesn't apply (match-all or empty queries → DataFrame
+    path).
 
     Filters are executed INSIDE the scorer (reference: filtered keyword
     queries run Occur.FILTER inside the same Lucene collector,
@@ -1539,6 +1578,21 @@ def search_wand(ctx: IndexContext, query: SearchQuery) -> Optional[DataFrame]:
         per_shard_stats=ctx.per_shard_stats,
         df_map=df_map,
     )
+    task, schema = _shard_task(scorer, k), _OUT_SCHEMA
+    if columns is not None:
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        files = ctx.docs_schema()  # shard_id is the partition directory
+        out = pa.schema([("_score", pa.float64())] + [
+            ("shard_id", pa.int32()) if c == "shard_id" else files.field(c)
+            for c in columns
+        ])
+        task = _shard_task(scorer, k, (ctx.docs_files(), files, out))
+        schema = from_arrow_schema(out)
+
+    def ungated(key, t):
+        return task(key, t, None)
+
     # Three frames. Ungated global-stats queries (no filters, no
     # tombstones) score straight off the partition-pruned scan via
     # mapInArrow (round 6, guide §2.4): zero exchanges, correct for
@@ -1548,59 +1602,36 @@ def search_wand(ctx: IndexContext, query: SearchQuery) -> Optional[DataFrame]:
     # group the scan by shard (their df column is shard-keyed); gated
     # queries cogroup it with the per-shard allow/deny doc ids.
     if gate_mode == "none" and not ctx.per_shard_stats:
-        return blocks.mapInArrow(
-            _shard_stream_runner(scorer), schema=_OUT_SCHEMA
-        )
+        return blocks.mapInArrow(_shard_stream_runner(ungated), schema=schema)
     if gate_mode == "none":
-        return blocks.groupBy("shard_id").applyInPandas(scorer, schema=_OUT_SCHEMA)
+        return blocks.groupBy("shard_id").applyInArrow(ungated, schema=schema)
     return (
         blocks.groupby("shard_id")
         .cogroup(gate_df.groupby("shard_id"))
-        .applyInPandas(scorer, schema=_OUT_SCHEMA)
+        .applyInArrow(task, schema=schema)
+    )
+
+
+def search_fast(
+    ctx: IndexContext, query: SearchQuery, columns=None
+) -> Optional[DataFrame]:
+    """WAND per shard → global (score desc, _id asc) top-k of ``_score``
+    plus the docs ``columns`` (default: the stored columns; ``_id``
+    among them) in ONE Spark job: postings scan → scorer task, which
+    reads its winners' columns from its own shard's docs files →
+    TakeOrderedAndProject. None when the fast path doesn't apply."""
+    rows = search_wand(ctx, query, columns or ctx.stored_columns())
+    if rows is None:
+        return None
+    return rows.orderBy(F.col("_score").desc(), F.col("_id").asc()).limit(
+        query.limit
     )
 
 
 def search_winners(ctx: IndexContext, query: SearchQuery) -> Optional[DataFrame]:
     """Global top-k WITH the docs physical key: (shard_id, __docid,
     _id, _score) — the recall frame hybrid fusion carries through
-    rrf_fuse_keyed so the FINAL stored-field join can be DPP-pruned.
-    The _id fetch here is itself the pruned (shard_id, __docid)
-    broadcast join (column-pruned to the id column). None when the
-    fast path doesn't apply."""
-    per_shard = search_wand(ctx, query)
-    if per_shard is None:
-        return None
-    winners = per_shard.select(
-        "shard_id", "__docid", F.col("score").alias("_score")
-    )
-    out = ctx.docs().select("shard_id", "__docid", "_id").join(
-        F.broadcast(winners), ["shard_id", "__docid"]
-    )
-    return (
-        out.orderBy(F.col("_score").desc(), F.col("_id").asc())
-        .limit(query.limit)
-    )
-
-
-def search_fast(ctx: IndexContext, query: SearchQuery) -> Optional[DataFrame]:
-    """WAND per shard → global (score desc, _id asc) top-k with stored
-    fields. None when the fast path doesn't apply."""
-    per_shard = search_wand(ctx, query)
-    if per_shard is None:
-        return None
-    stored = ctx.stored_columns()
-    docs = ctx.docs()
-    # stored-field materialization: join the ≤ shards·k winners back on
-    # (shard_id, __docid) — shard_id is the docs table's PARTITION
-    # column, so the broadcast join triggers dynamic partition pruning
-    # (only winner shards are scanned), and the __docid equi-join prunes
-    # row groups within them (docs are sorted by __docid per partition).
-    winners = per_shard.select(
-        "shard_id", "__docid", F.col("score").alias("_score")
-    )
-    out = docs.join(F.broadcast(winners), ["shard_id", "__docid"])
-    return (
-        out.orderBy(F.col("_score").desc(), F.col("_id").asc())
-        .limit(query.limit)
-        .select("_score", *stored)
-    )
+    rrf_fuse_keyed to its final stored-field join. The scorer task
+    reads only ``_id`` from the docs files."""
+    top = search_fast(ctx, query, ["shard_id", "__docid", "_id"])
+    return None if top is None else top.select("shard_id", "__docid", "_id", "_score")

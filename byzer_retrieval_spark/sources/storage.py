@@ -37,7 +37,7 @@ import shutil
 import tempfile
 import time
 from dataclasses import dataclass
-from typing import Any, Dict, Optional
+from typing import Any, Dict, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -162,6 +162,20 @@ class IndexStore:
             ),
             default=0,
         )
+
+    def docs_files(self) -> Dict[int, List[str]]:
+        """{shard_id: sorted docs parquet files} of the ``shard_id=N``
+        directories directly under docs/, listed without Spark: the files
+        a shard's scorer task reads its winners' stored fields from."""
+        out: Dict[int, List[str]] = {}
+        for part in sorted(os.listdir(self.docs_path)):
+            if part.startswith("shard_id="):
+                d = os.path.join(self.docs_path, part)
+                out[int(part[len("shard_id="):])] = [
+                    os.path.join(d, f) for f in sorted(os.listdir(d))
+                    if f.endswith(".parquet") and not f.startswith(("_", "."))
+                ]
+        return out
 
     def write_stats(self, stats_df: DataFrame) -> None:
         """Write the (field, term, df, cf) term-dictionary/stats table

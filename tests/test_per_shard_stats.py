@@ -168,3 +168,25 @@ def test_per_shard_stats_survive_upsert(pss_engine, spark):
     np.testing.assert_allclose(
         [g[1] for g in got], [e[1] for e in exp], rtol=1e-9
     )
+
+
+def test_per_shard_stats_grouped_frame_cuts_ties_by_id(pss_engine, spark):
+    """After an upsert __docid order is no longer _id order, so the
+    grouped frame's task keeps a constant-score prefix's boundary ties
+    and must cut them by (score desc, _id asc) before it reads the
+    stored fields: new docs with the smallest _ids but the highest
+    __docids of shard 0 hold the top-k."""
+    eng, rows, shard_of, s0, s1 = pss_engine
+    cand = spark.createDataFrame(
+        [(f"a{j}",) for j in range(16)], "id string"
+    ).select("id", F.pmod(F.xxhash64("id"), F.lit(2)).alias("s"))
+    new = sorted(r["id"] for r in cand.collect() if r["s"] == 0)[:3]
+    assert len(new) == 3
+    eng.upsert(spark.createDataFrame([{"_id": i, "content": "hot new"} for i in new]))
+    ctx = eng.query_ctx()
+    assert not ctx.docid_id_order and ctx.tombstones_df() is None
+    q = SearchQuery(keyword="ho*", fields=["content"], limit=3)
+    df = eng.search(q)
+    got = [r["_id"] for r in df.collect()]
+    assert "FlatMapGroupsInArrow" in df._jdf.queryExecution().executedPlan().toString()
+    assert got == [r["_id"] for r in search_df(ctx, q).collect()] == new

@@ -55,13 +55,25 @@ def split_engine(spark, tmp_path_factory):
     return eng
 
 
-def _ranked(eng, keyword, table="default"):
+def _ranked(eng, keyword, table="default", jobs=None):
+    """Ranked (id, score) pairs and the plan; with a ``jobs`` list, the
+    executed plan and the number of Spark jobs the collect ran are
+    appended to it (planning runs one more, the postings reader's footer
+    job, only when the snapshot's context is opened)."""
     q = SearchQuery(keyword=keyword, fields=["content"], limit=10)
+    sc = eng.spark.sparkContext
+    group = f"ranked-{keyword}-{table}"
     df = eng.search(q, table=table)
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain()
-    return [(r["_id"], round(r["_score"], 5)) for r in df.collect()], buf.getvalue()
+    sc.setJobGroup(group, keyword)
+    got = [(r["_id"], round(r["_score"], 5)) for r in df.collect()]
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    if jobs is not None:
+        jobs.append(df._jdf.queryExecution().executedPlan().toString())
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    return got, buf.getvalue()
 
 
 def _slow(eng, keyword):
@@ -82,9 +94,21 @@ def test_layout_would_split_without_pin(split_engine):
 
 @pytest.mark.parametrize("keyword", QUERIES)
 def test_stream_path_matches_slow_path(split_engine, keyword):
-    got, plan = _ranked(split_engine, keyword)
+    executed = []
+    got, plan = _ranked(split_engine, keyword, jobs=executed)
     # the stream path is the one under test
     assert "MapInArrow" in plan and "hashpartitioning" not in plan
+    # one job: the scorer task reads its winners' stored fields itself,
+    # so no docs scan and no broadcast join follow it
+    executed_plan, n_jobs = executed
+    assert "MapInArrow" in executed_plan
+    assert "TakeOrderedAndProject" in executed_plan
+    assert "BroadcastHashJoin" not in executed_plan
+    # its only scan reads postings (term), never docs (__docid)
+    scans = [ln for ln in executed_plan.splitlines() if "Scan parquet" in ln]
+    assert len(scans) == 1 and "term#" in scans[0], scans
+    assert "__docid" not in scans[0], scans
+    assert n_jobs == 1
     assert got == _slow(split_engine, keyword)
 
 

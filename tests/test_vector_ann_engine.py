@@ -725,3 +725,50 @@ def test_batch_underfilled_probes_share_exact_scan(vec_engine, monkeypatch):
         ]
         assert by_qid.get(qid, []) == single, (qid, q.filters)
         assert 0 < len(by_qid[qid]) <= 4
+
+
+def test_keyword_frames_fetch_stored_rows_after_upsert(vec_engine, spark):
+    """Keyword searches read their winners' stored fields inside the
+    scorer task, array<float> embeddings included. After an upsert
+    __docid order is no longer _id order, so a constant-score prefix
+    keeps its boundary ties per shard, and the task must cut them by
+    (score desc, _id asc): the new docs below have the smallest _ids
+    but the highest __docids. Checked on the cogroup frame (tombstones
+    live; plain and filtered), through search_winners in a hybrid, and
+    on the stream frame after a compaction."""
+    vec = [float(j % 7) / 8.0 for j in range(64)]  # exact in float32
+    new = [
+        (f"0{c}", 9_990_100 + j, "spark fresh", "en", vec)
+        for j, c in enumerate("abcdef")
+    ]
+    vec_engine.upsert(spark.createDataFrame(
+        new + [("0", 0, "spark zero", "es", vec), ("1", 1, "spark moved", "en", vec)],
+        "_id string, doc_id long, text string, lang string, embedding array<float>",
+    ))
+    en = {"and": [{"field": "lang", "value": "en"}]}
+
+    def same(q):
+        fast = [r.asDict() for r in vec_engine.search(q).collect()]
+        slow = [r.asDict() for r in vec_engine.search(q, use_fast_path=False).collect()]
+        assert [r["_id"] for r in fast] == [r["_id"] for r in slow]
+        assert [r["_score"] for r in fast] == pytest.approx([r["_score"] for r in slow])
+        assert [dict(r, _score=0) for r in fast] == [dict(r, _score=0) for r in slow]
+        return fast
+
+    ctx = vec_engine.query_ctx()
+    assert not ctx.docid_id_order and ctx.tombstones_df() is not None
+    got = same(SearchQuery(keyword="sp*", fields=["text"], limit=4))
+    assert [r["_id"] for r in got] == ["0", "0a", "0b", "0c"]
+    assert all(r["embedding"] == vec for r in got)
+    got = same(SearchQuery(keyword="sp*", fields=["text"], limit=4, filters=en))
+    assert [r["_id"] for r in got] == ["0a", "0b", "0c", "0d"]
+    same(SearchQuery(keyword="sp*", fields=["text"], vector=vec,
+                     vector_field="embedding", limit=4))
+
+    vec_engine.compact()
+    ctx = vec_engine.query_ctx()
+    assert not ctx.docid_id_order and ctx.tombstones_df() is None
+    q = SearchQuery(keyword="sp*", fields=["text"], limit=4)
+    plan = vec_engine.search(q)._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "Exchange" not in plan
+    assert [r["_id"] for r in same(q)] == ["0", "0a", "0b", "0c"]
