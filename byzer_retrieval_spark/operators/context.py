@@ -158,8 +158,11 @@ class IndexContext:
         file's footer: no Spark docs reader is built."""
         import pyarrow.parquet as pq
 
-        first = next(f for fs in self.docs_files().values() for f in fs)
-        return self._memo("docs_schema", lambda: pq.read_schema(first).remove_metadata())
+        def read():
+            first = next(f for fs in self.docs_files().values() for f in fs)
+            return pq.read_schema(first).remove_metadata()
+
+        return self._memo("docs_schema", read)
 
     def stored_columns(self) -> List[str]:
         return [c for c in self.docs_schema().names if c != "__docid"]

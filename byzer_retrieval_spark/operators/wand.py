@@ -1578,7 +1578,7 @@ def search_wand(
         per_shard_stats=ctx.per_shard_stats,
         df_map=df_map,
     )
-    task, schema = _shard_task(scorer, k), _OUT_SCHEMA
+    docs, schema = None, _OUT_SCHEMA
     if columns is not None:
         from pyspark.sql.pandas.types import from_arrow_schema
 
@@ -1587,8 +1587,8 @@ def search_wand(
             ("shard_id", pa.int32()) if c == "shard_id" else files.field(c)
             for c in columns
         ])
-        task = _shard_task(scorer, k, (ctx.docs_files(), files, out))
-        schema = from_arrow_schema(out)
+        docs, schema = (ctx.docs_files(), files, out), from_arrow_schema(out)
+    task = _shard_task(scorer, k, docs)
 
     def ungated(key, t):
         return task(key, t, None)
